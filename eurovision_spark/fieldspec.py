@@ -191,12 +191,12 @@ def label_literal(field: Field) -> str | None:
     regex, or None when the regex is not of that shape.
 
     Used by the parser's label-keyed dispatch (operators/parse.py
-    ``_first_match``): when every field's label is derivable and
-    unique, a line needs ONE substring split + ONE field regex instead
-    of trying all ~50 patterns. The None return keeps the extension
-    point honest — a future field with a non-label-shaped regex simply
-    drops the whole dispatch back to the try-every-pattern path, never
-    silently changing semantics.
+    ``_first_match``): a line needs ONE substring split + ONE field
+    regex instead of trying all ~50 patterns. Labels must be unique
+    across the shipped fields (pinned by tests/test_parse_golden.py).
+    The None return keeps the extension point honest — a field with a
+    non-label-shaped regex goes to the try-every-pattern residual path,
+    never silently changing semantics.
     """
     import re as _re
 

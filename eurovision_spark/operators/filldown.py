@@ -2,29 +2,22 @@
 
 The reference's record-boundary state — "the current trial id" carried
 line to line (scan.py:341-351) — is a fill-down of the anchor value over
-the global line order. The naive Spark formulation is
-``last(value, ignorenulls) OVER (ORDER BY line_no)`` which sorts the
-whole table in ONE partition (SURVEY §7 hard item 1). This module
-implements the scalable form:
+the global line order. The naive ``last(value, ignorenulls) OVER (ORDER
+BY line_no)`` sorts the whole table in ONE partition (SURVEY §7 hard
+item 1). Here the order is cut into segments ``order >> 33``: with the
+``monotonically_increasing_id`` line numbers of ``parse.number_lines``
+one segment is one scanned file split.
 
-1. anchors (lines that carry a value) are a small fraction of lines —
-   one per record. ``lead`` over anchors yields non-overlapping
-   [start, end) intervals per value. The anchor window is PARTITIONED:
-   anchors hash into ~8x-parallelism order-range buckets, ``lead`` runs
-   inside each bucket, and the boundary (the last anchor of each
-   bucket) is fixed up from a bucket-minima table — a relation bounded
-   by the bucket count, never by the data, resolved with a broadcast
-   self-join. No single-partition window exists anywhere in the plan;
-   the only SinglePartition exchanges left are the final stages of the
-   scalar max(line_no) aggregates (one row per map partition).
-2. intervals are exploded onto fixed-width line-number buckets; lines
-   join on their bucket + a range filter. This is an equi-join shuffle
-   on the bucket id — no global sort of the data ever happens, and
-   bucket width bounds the explode factor (records span few buckets).
+1. inside a segment, ``last(anchor, ignorenulls)`` over a window
+   partitioned by segment — a per-split sort, never a global one;
+2. rows before their segment's first anchor take a carry-in: the last
+   anchor of the nearest earlier segment. It comes from a one-row-per-
+   segment summary (``max_by(anchor, order)``), collected to the driver
+   and broadcast-joined back on the segment id — bounded by the split
+   count, never by the data.
 
-At 100 TB: lines stay hash-partitioned by bucket; anchors (~2% of
-input) hash-partition across ANCHOR_BUCKETS ranges, so both levels of
-the hierarchy scale with the cluster, not the data.
+Exact for any order values: small ids all fall into segment 0, which is
+the naive window inside one partition.
 """
 
 from __future__ import annotations
@@ -32,85 +25,27 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
-DEFAULT_BUCKET = 4096  # lines per bucket; records are <= a few hundred lines
+SEGMENT_SHIFT = 33  # monotonically_increasing_id keeps the row index in the low 33 bits
 
 
-def fill_down(
-    lines: DataFrame,
-    order_col: str,
-    anchor_col: str,
-    out_col: str,
-    bucket: int = DEFAULT_BUCKET,
-) -> DataFrame:
+def fill_down(lines: DataFrame, order_col: str, anchor_col: str, out_col: str) -> DataFrame:
     """Add ``out_col`` = the last non-null ``anchor_col`` at or before each
     row (by ``order_col``). Rows before the first anchor get NULL.
     """
-    # open-ended last interval is capped at the real max order value
-    # (tiny agg, broadcast into the interval build)
-    max_order = lines.agg(F.max(order_col).alias("_max_order"))
+    keyed = lines.withColumn("_seg", F.shiftright(F.col(order_col), SEGMENT_SHIFT))
+    # max_by skips null orderings: a segment without anchors gets NULL
+    summary = keyed.groupBy("_seg").agg(
+        F.max_by(anchor_col, F.when(F.col(anchor_col).isNotNull(), F.col(order_col))).alias("_last")
+    ).collect()
+    carry_rows, carry = [], None
+    for r in sorted(summary, key=lambda r: r["_seg"]):
+        carry_rows.append((r["_seg"], carry))
+        if r["_last"] is not None:
+            carry = r["_last"]
+    anchor_type = lines.schema[anchor_col].dataType.simpleString()
+    carry_in = lines.sparkSession.createDataFrame(carry_rows, f"_seg bigint, _carry {anchor_type}")
 
-    anchors = lines.filter(F.col(anchor_col).isNotNull()).select(
-        F.col(order_col).alias("_start"), F.col(anchor_col).alias(out_col)
-    )
-
-    # --- interval ends: range-partitioned lead + boundary fix-up -----------
-    # Anchor-range buckets: width derived from the order span so the
-    # bucket COUNT is ~fixed (scales with the cluster, not the data);
-    # derived as a column from the broadcast max — no driver action.
-    n_abuckets = max(lines.sparkSession.sparkContext.defaultParallelism * 8, 8)
-    keyed_anchors = (
-        anchors.crossJoin(F.broadcast(max_order))
-        .withColumn("_aw", F.expr(f"(_max_order div {n_abuckets}) + 1"))
-        .withColumn("_ab", F.expr("_start div _aw"))
-    )
-    w_in = W.partitionBy("_ab").orderBy("_start")
-    led = keyed_anchors.withColumn("_next_in", F.lead("_start").over(w_in))
-
-    # bucket-minima table: one row per NON-EMPTY anchor bucket (bounded
-    # by n_abuckets, i.e. by the cluster, not the data). "First anchor
-    # of the next non-empty bucket" is a broadcast self-join over this
-    # tiny relation — O(n_abuckets²) trivially, and it keeps the whole
-    # plan free of single-partition exchanges (a global lead window
-    # here would reintroduce one).
-    mins = keyed_anchors.groupBy("_ab").agg(F.min("_start").alias("_bmin"))
-    later = mins.select(F.col("_ab").alias("_ab2"), F.col("_bmin").alias("_bmin2"))
-    nxt = (
-        mins.join(F.broadcast(later), F.col("_ab2") > F.col("_ab"), "left")
-        .groupBy("_ab")
-        .agg(F.min("_bmin2").alias("_bnext"))
-    )
-
-    intervals = (
-        led.join(F.broadcast(nxt), "_ab")
-        .select(
-            "_start",
-            out_col,
-            F.coalesce(
-                F.col("_next_in"), F.col("_bnext"), F.col("_max_order") + 1
-            ).alias("_end"),
-        )
-    )
-
-    # --- lines join intervals on fixed-width order buckets -----------------
-    spans = intervals.select(
-        "_start",
-        "_end",
-        out_col,
-        # integer div, not double division + cast: doubles lose integer
-        # precision past 2^53, which a 100 TB line count can reach
-        F.explode(
-            F.sequence(
-                F.expr(f"_start div {bucket}"),
-                F.expr(f"(_end - 1) div {bucket}"),
-            )
-        ).alias("_sbucket"),
-    )
-    keyed = lines.withColumn("_bucket", F.expr(f"{order_col} div {bucket}"))
-    joined = keyed.join(
-        spans,
-        (F.col("_bucket") == F.col("_sbucket"))
-        & (F.col(order_col) >= F.col("_start"))
-        & (F.col(order_col) < F.col("_end")),
-        "left",
-    )
-    return joined.drop("_bucket", "_sbucket", "_start", "_end")
+    w = W.partitionBy("_seg").orderBy(order_col).rowsBetween(W.unboundedPreceding, 0)
+    filled = F.coalesce(F.last(anchor_col, ignorenulls=True).over(w), F.col("_carry"))
+    joined = keyed.join(F.broadcast(carry_in), "_seg", "left")
+    return joined.withColumn(out_col, filled).drop("_seg", "_carry")

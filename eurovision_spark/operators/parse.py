@@ -9,9 +9,10 @@ then first-non-empty merge into per-trial dicts (294-307) flushed to
 SQLite (263-278). Here the same computation is expressed as
 (SURVEY §3.1 "Spark rebuild"):
 
-    text scan (S4) -> stable line_no -> whitespace-normalize (P3)
-    -> cheap screening rlike (P1) -> marker columns
-    -> scalable fill-down of the trial id (A1, operators/filldown.py)
+    text scan (S4) -> line_no = monotonically_increasing_id
+    -> whitespace-normalize (P3) -> cheap screening rlike (P1)
+    -> marker columns
+    -> per-split carry-forward of the trial id (A1, operators/filldown.py)
     -> per-trial segment counters for IMP/sponsor blocks (windows)
     -> ONE coalesce-of-regexp_extract dispatch chain (P2, first match
        wins — generated from fieldspec.py, the single extension point)
@@ -52,43 +53,22 @@ from eurovision_spark.operators.imp_dedup import dedup_imps
 def number_lines(
     text_df: DataFrame, value_col: str = "value", caches: list | None = None
 ) -> DataFrame:
-    """Attach a stable, dense global line number to a text DataFrame —
-    JVM-only.
+    """Attach a stable global line number to a text DataFrame — JVM-only,
+    no Spark action, no join.
 
-    ``rdd.zipWithIndex`` would serialize every line through Python;
-    instead: ``monotonically_increasing_id``'s low 33 bits are the row
-    index within a partition, so a dense global number is that index
-    plus a per-partition offset. The offset table is one tiny collect
-    (one row per file split) joined back as a broadcast — the text
-    itself never leaves the JVM and never globally sorts.
+    ``line_no`` is ``monotonically_increasing_id`` (partition id << 33 |
+    row): file splits are scanned in file order, so it increases in file
+    order, with gaps between splits — fill_down's segments. The lazy
+    persist (MEMORY_AND_DISK: spills, never OOMs) is filled by the first
+    job over the lines (in parse_registry the fill-down's carry-in
+    summary); later consumers read it, not the file.
     """
-    spark = text_df.sparkSession
     raw = text_df.select(
-        F.col(value_col).alias("raw"),
-        F.spark_partition_id().alias("_pid"),
-        F.monotonically_increasing_id().alias("_mid"),
+        F.monotonically_increasing_id().alias("line_no"), F.col(value_col).alias("raw")
     ).persist()
     if caches is not None:
         caches.append(raw)
-    # the count job doubles as cache materialization: without it the
-    # source file is re-read by every downstream consumer (fill-down
-    # reads lines twice: anchors + keyed side) — 3 scans become 1.
-    # MEMORY_AND_DISK default: a dump bigger than RAM spills, never OOMs.
-    counts = {r["_pid"]: r["count"] for r in raw.groupBy("_pid").count().collect()}
-    offsets, acc = [], 0
-    for pid in sorted(counts):
-        offsets.append((pid, acc))
-        acc += counts[pid]
-    off = spark.createDataFrame(offsets or [(0, 0)], "_pid: int, _off: bigint")
-    return raw.join(F.broadcast(off), "_pid").select(
-        (F.col("_off") + F.col("_mid") % F.lit(1 << 33)).alias("line_no"), "raw"
-    )
-
-
-def read_lines(spark: SparkSession, path: str) -> DataFrame:
-    """S4 text scan with a stable global line number (SURVEY §7 hard
-    item 1: file order is the parser's only implicit input)."""
-    return number_lines(spark.read.text(path))
+    return raw
 
 
 def _extract(field: fieldspec.Field, norm_col: Column) -> Column:
@@ -124,17 +104,14 @@ def _first_match(fields: list[fieldspec.Field], norm_col: Column) -> Column:
     regex runs — one split + one regex per line instead of ~50 regex
     attempts (measured ~3x off the whole melt stage; at 100 TB the melt
     is the parse's dominant per-row cost). Fields whose regex is not
-    label-shaped (e.g. placebo's '?'-separated label) — or all of them,
-    if labels ever collide — fall back to the try-every-pattern path;
-    a line can satisfy at most one side (labels are unique literals and
+    label-shaped (e.g. placebo's '?'-separated label) fall back to the
+    try-every-pattern path; a line can satisfy at most one side (labels
+    are unique literals — pinned by tests/test_parse_golden.py — and
     residual patterns carry non-label shapes), so coalesce is
     order-safe."""
     labeled = [(f, fieldspec.label_literal(f)) for f in fields]
     residual = [f for f, lab in labeled if lab is None]
     dispatch = [(f, lab) for f, lab in labeled if lab is not None]
-    labels = [lab for _, lab in dispatch]
-    if not dispatch or len(set(labels)) != len(labels):
-        return _try_all(fields, norm_col)
 
     label = F.substring_index(norm_col, ":", 1)
     chain: Column | None = None
@@ -243,8 +220,9 @@ def parse_registry_lines(
         )
     )
 
-    # A1: fill down the trial id over the global line order (scalable —
-    # no single-partition sort; see filldown.py)
+    # A1: fill down the trial id over the global line order — a window
+    # per file split plus a broadcast carry-in across splits, never a
+    # single-partition sort (see filldown.py)
     with_trial = fill_down(annotated, "line_no", "eudract", "trial_id").filter(
         F.col("trial_id").isNotNull()
     )

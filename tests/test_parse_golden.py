@@ -140,6 +140,36 @@ def test_locations_both_forms(tables):
     assert not [r for r in tables["location"] if r.eudract_id == T2]
 
 
+@pytest.mark.parametrize("max_partition_bytes", [64, 256])
+def test_golden_output_identical_at_tiny_split_size(spark, tables, tmp_path, max_partition_bytes):
+    """The same fixture read as many tiny file splits: records, their
+    IMP/sponsor/location blocks and the trial-id carry-in cross real
+    split boundaries, and all four tables equal the golden ones."""
+    from eurovision_spark.operators.parse import parse_registry
+
+    p = tmp_path / "dump.txt"
+    p.write_text(FIXTURE, encoding="utf8")
+    key = "spark.sql.files.maxPartitionBytes"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, str(max_partition_bytes))
+    try:
+        assert spark.read.text(str(p)).rdd.getNumPartitions() >= len(FIXTURE) // max_partition_bytes
+        got = {k: df.collect() for k, df in parse_registry(spark, str(p)).items()}
+    finally:
+        spark.conf.set(key, saved)
+    assert {k: sorted(v) for k, v in got.items()} == {k: sorted(v) for k, v in tables.items()}
+
+
+def test_dispatch_labels_are_unique():
+    """_first_match dispatches a line on its literal label: two fields
+    sharing a label would silently shadow one another."""
+    from eurovision_spark import fieldspec
+
+    fields = [*fieldspec.TRIAL_FIELDS, *fieldspec.IMP_FIELDS, *fieldspec.SPONSOR_FIELDS]
+    labels = [lab for lab in map(fieldspec.label_literal, fields) if lab is not None]
+    assert labels and len(labels) == len(set(labels))
+
+
 def test_yes_trumps_no_flag(spark, tmp_path_factory):
     from eurovision_spark.operators.parse import parse_registry
 

@@ -259,9 +259,9 @@ def test_parse_pipeline_is_jvm_only(spark, tmp_path):
 
 
 def test_parse_pipeline_has_no_data_sized_single_partition_step(spark, tmp_path):
-    """The fill-down anchor window is range-partitioned with a
-    broadcast boundary fix-up (filldown.py): no unpartitioned Window
-    may appear anywhere in the ingest plans, and every remaining
+    """The fill-down window is partitioned by file split with a
+    broadcast carry-in across splits (filldown.py): no unpartitioned
+    Window may appear anywhere in the ingest plans, and every remaining
     SinglePartition exchange must be the final stage of a scalar
     aggregate (one row per map partition — bounded by the cluster,
     not the data)."""

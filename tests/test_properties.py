@@ -21,7 +21,7 @@ from __future__ import annotations
 
 import random
 
-from hypothesis import HealthCheck, given, settings, strategies as st
+from hypothesis import HealthCheck, example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 VALS = st.lists(st.sampled_from(["", "a", "bb", "ccc", "dd"]), min_size=1, max_size=8)
@@ -155,30 +155,47 @@ def test_fuzzy_merge_order_properties(spark, rows, seed):
     assert len(got) == len(base)
 
 
-# --- fill_down: range-partitioned anchors == naive global window -----------
+# --- fill_down: per-segment carry-forward == naive global window ----------
 
+# (segment, row in segment, is_anchor): line_no = (segment << 33) + row,
+# the monotonically_increasing_id shape of one scanned split per segment
 FILLDOWN_CASES = st.lists(
-    st.tuples(st.integers(0, 500), st.booleans()), min_size=1, max_size=60, unique_by=lambda t: t[0]
+    st.tuples(st.integers(0, 5), st.integers(0, 40), st.booleans()),
+    min_size=1,
+    max_size=60,
+    unique_by=lambda t: (t[0], t[1]),
 )
 
 
-@given(rows=FILLDOWN_CASES, bucket=st.sampled_from([1, 7, 64]))
+@given(rows=FILLDOWN_CASES)
+@example(
+    # segment 0: rows before its first anchor (NULL); segment 1: no
+    # anchor at all; segment 2: rows before its anchor carry segment 0's
+    # last; segment 3 absent; segment 5: no anchor, carries segment 2's
+    rows=[
+        (0, 0, False), (0, 3, True), (0, 4, False), (0, 9, True), (0, 10, False),
+        (1, 0, False), (1, 7, False),
+        (2, 1, False), (2, 2, True), (2, 30, False),
+        (5, 0, False), (5, 40, False),
+    ]
+)
 @PROP_SETTINGS
-def test_fill_down_equals_naive_global_window(spark, rows, bucket):
-    """The bucketed + boundary-fixed-up fill_down must equal the naive
-    single-partition `last(ignorenulls) OVER (ORDER BY line)` for any
-    anchor placement, including none, all, and bucket-boundary anchors."""
+def test_fill_down_equals_naive_global_window(spark, rows):
+    """The per-segment window + broadcast carry-in fill_down must equal
+    the naive single-partition `last(ignorenulls) OVER (ORDER BY line)`
+    for any anchor placement across segments, including none, all,
+    anchor-free segments and rows before any anchor."""
     from pyspark.sql import Window as W
 
     from eurovision_spark.operators.filldown import fill_down
 
     df = spark.createDataFrame(
-        [(ln, f"v{ln}" if is_anchor else None) for ln, is_anchor in rows],
+        [((seg << 33) + row, f"v{seg}_{row}" if is_anchor else None) for seg, row, is_anchor in rows],
         "line_no long, anchor string",
     ).repartition(4)
     got = {
         r["line_no"]: r["filled"]
-        for r in fill_down(df, "line_no", "anchor", "filled", bucket=bucket).collect()
+        for r in fill_down(df, "line_no", "anchor", "filled").collect()
     }
     w = W.orderBy("line_no").rowsBetween(W.unboundedPreceding, W.currentRow)
     want = {
