@@ -22,35 +22,32 @@ pattern here keeps its ``^`` anchor explicitly.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-from typing import Literal
+from dataclasses import dataclass
 
 from pyspark.sql import types as T
-
-MergeRule = Literal["first_non_empty", "yes_trumps_no"]
 
 
 @dataclass(frozen=True)
 class Field:
-    """One extracted field: name, storage type, line regex, merge rule.
+    """One extracted field: name, storage type, line regex, case rule.
 
     ``dtype``      : "text" | "bool01" (yes/no -> 1/0, reference scan.py:115-119)
     ``regex``      : anchored pattern with ONE capture group (group 1 kept)
     ``casefold``   : lower-case the captured value (scan.py:322-325; the
                      official_title is the one exemption)
-    ``merge``      : cross-member-state merge rule. The reference's actual
-                     behavior is first-non-empty (scan.py:302-305); its
-                     *intended* yes-trumps-no branch is dead code
-                     (scan.py:296-301, SURVEY §2.4 A3). Engine default =
-                     actual semantics; ``yes_trumps_no`` is available as
-                     the documented deviation, gated by a parser flag.
+
+    The cross-member-state merge rule is not per field: the parser's
+    ``yes_trumps_no`` flag (operators/parse.parse_registry) is the one
+    switch. Its default is the reference's actual first-non-empty
+    behavior (scan.py:302-305); ``yes_trumps_no=True`` applies the
+    reference's *intended* yes-trumps-no branch, which is dead code
+    there (scan.py:296-301, SURVEY §2.4 A3), to every bool01 field.
     """
 
     name: str
     dtype: str
     regex: str
     casefold: bool = True
-    merge: MergeRule = "first_non_empty"
 
 
 # --- trial table (reference scan.py:411-462) -------------------------------

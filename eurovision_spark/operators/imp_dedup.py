@@ -84,10 +84,12 @@ def connected_components_any_key(
     ).drop("_comp")
 
 
+CC_CHECKPOINT_EVERY = 3  # propagation rounds between lineage truncations
+
+
 def cc_edge_list(
     edges: DataFrame, src: str, dst: str, max_iter: int = 15,
-    checkpoint_every: int = 3, materialized: bool = False,
-    leaf: bool = True, loop_partitions: int | None = None,
+    materialized: bool = False, leaf: bool = True,
     reliable: bool = False, n_edges_hint: int | None = None,
 ) -> DataFrame:
     """Connected components over a global (src, dst) edge list: label
@@ -109,7 +111,7 @@ def cc_edge_list(
 
     Every round shuffles ids only, never payloads — the formulation
     that survives a 100 TB corpus — and the label frame is
-    ``localCheckpoint``-ed every ``checkpoint_every`` rounds so logical-
+    ``localCheckpoint``-ed every CC_CHECKPOINT_EVERY rounds so logical-
     plan depth stays O(1) instead of nesting join levels per round.
     ``reliable=True`` is the 100 TB cluster path AS A FLAG (VERDICT r07
     item #7, not a code edit): lineage truncation (and the final label
@@ -146,16 +148,11 @@ def cc_edge_list(
     the labels are already materialized in the persist cache by the
     fixpoint-test action.
 
-    ``loop_partitions``: partition count for the propagation rounds'
-    exchanges; None derives it from the SYMMETRIZED row volume the loop
-    actually shuffles (2x the directed edge count; ~250k id rows per
-    partition, floored at 8 — the measured local sweet spot — and
-    capped at the session's parallelism), so a billion-edge cluster
-    graph gets thousands of partitions instead of a hardcoded constant.
-    The parallelism read is Connect-tolerant (sparkContext raises on
-    Spark Connect; falls back to spark.sql.shuffle.partitions there,
-    consistent with the leaf fence above). ``n_edges_hint``: a caller
-    that already knows the edge volume (or a ceiling on it — the LSH
+    The propagation rounds' exchange partition count derives from the
+    SYMMETRIZED row volume the loop actually shuffles (2x the directed
+    edge count; ~250k id rows per partition, floored at 8 and capped
+    at the session's parallelism). ``n_edges_hint``: a caller that
+    already knows the edge volume (or a ceiling on it — the LSH
     verify's measured candidate count bounds its verified edges)
     passes it to skip the sizing count action entirely.
 
@@ -223,7 +220,7 @@ def cc_edge_list(
     else:
         # a count on a materialized leaf is one cheap metadata-ish job;
         # it sizes the loop's exchanges below
-        n_edges = edges.count() if loop_partitions is None else 0
+        n_edges = edges.count()
     # AQE off for the propagation rounds: adaptive execution
     # materializes EVERY exchange of every round as its own stage-job
     # to re-plan on runtime stats — on an iterative id-only graph the
@@ -243,14 +240,13 @@ def cc_edge_list(
     # edge count (~250k rows/partition), floored at 8 (the measured
     # local sweet spot), capped at defaultParallelism — a billion-edge
     # cluster graph gets thousands of partitions, not a literal 8.
-    if loop_partitions is None:
-        try:
-            max_par = spark.sparkContext.defaultParallelism
-        except Exception:  # pragma: no cover - Spark Connect sessions
-            max_par = int(spark.conf.get("spark.sql.shuffle.partitions", "8"))
-        # size from what the loop really shuffles: the 2x symmetrized
-        # edge frame (plus same-order label frames)
-        loop_partitions = max(8, min(max_par, (2 * n_edges) // 250_000))
+    try:
+        max_par = spark.sparkContext.defaultParallelism
+    except Exception:  # pragma: no cover - Spark Connect sessions
+        max_par = int(spark.conf.get("spark.sql.shuffle.partitions", "8"))
+    # size from what the loop really shuffles: the 2x symmetrized
+    # edge frame (plus same-order label frames)
+    loop_partitions = max(8, min(max_par, (2 * n_edges) // 250_000))
     sp_was = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(loop_partitions))
     sym = edges.select(F.col(src).alias("node"), F.col(dst).alias("nbr")).unionByName(
@@ -315,7 +311,7 @@ def cc_edge_list(
                     "node", "_mid", F.coalesce("_pc", "comp").alias("comp")
                 )
             new_labels = h2.persist()
-            if (i + 1) % checkpoint_every == 0:
+            if (i + 1) % CC_CHECKPOINT_EVERY == 0:
                 # truncate lineage: without this each round nests more join
                 # levels into the logical plan (O(rounds) plan depth,
                 # O(rounds^2) analysis cost, ~10k-line explain output)

@@ -1831,6 +1831,16 @@ def ks_drift_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ks_drift_frame(toks, value_col="n_toks", width=KS_TOK_W)
 
 
+def grid_bin(value: Column, width: float) -> Column:
+    """floor(value / width) clamped to the 64-bin drift grid, as bigint:
+    the one binning expression of ks_drift_frame, psi_drift_frame and
+    the streaming drift and quality gates."""
+    return F.least(
+        F.greatest(F.floor(value / F.lit(width)), F.lit(0)),
+        F.lit(KS_NBINS - 1),
+    ).cast("bigint")
+
+
 def ks_drift_frame(
     d: DataFrame, value_col: str = "n_chars", width: float = KS_W
 ) -> DataFrame:
@@ -1838,22 +1848,24 @@ def ks_drift_frame(
     (source, <value_col>) frame — split from the registered queries so
     the planted-drift invariant tests can feed synthetic distributions
     and so any numeric column bins through the same machinery."""
-    spark = d.sparkSession
-    bin_ = (
-        F.least(
-            F.greatest(F.floor(F.col(value_col) / F.lit(width)), F.lit(0)),
-            F.lit(KS_NBINS - 1),
-        )
-    ).cast("bigint")
     # the bounded (source, bin) aggregate is the ONLY corpus-sized
     # work; it feeds both the source list and the grid join, so it is
     # materialized once — without this the corpus scans twice
     counts = (
-        d.select("source", bin_.alias("bin"))
+        d.select("source", grid_bin(F.col(value_col), width).alias("bin"))
         .groupBy("source", "bin")
         .agg(F.count("*").cast("double").alias("n"))
         .localCheckpoint(eager=False)  # lazy (r10): source-list job materializes
     )
+    return ks_from_bin_counts(counts)
+
+
+def ks_from_bin_counts(counts: DataFrame) -> DataFrame:
+    """(source, bin, n) -> (source, n_docs, ks_vs_rest): the grid-KS
+    arithmetic over pre-aggregated bin counts, shared with the
+    streaming drift gate (see :func:`psi_from_bin_counts`). Callers
+    materialize ``counts``."""
+    spark = counts.sparkSession
     srcs = counts.select("source").distinct()
     bins = spark.range(KS_NBINS).select(F.col("id").cast("bigint").alias("bin"))
     # sources x 64 literal grid — a bounded cross of two tiny frames,
@@ -1964,16 +1976,10 @@ def psi_drift_frame(
     """(source, n_docs, psi_vs_rest) smoothed-PSI drift report over a
     (source, <value_col>) frame — same split as :func:`ks_drift_frame`
     so planted-distribution tests and any numeric column reuse it."""
-    bin_ = (
-        F.least(
-            F.greatest(F.floor(F.col(value_col) / F.lit(width)), F.lit(0)),
-            F.lit(KS_NBINS - 1),
-        )
-    ).cast("bigint")
     # one-scan rule (ks_drift pattern): the bounded (source, bin)
     # aggregate feeds the source list AND the grid join — materialize it
     counts = (
-        d.select("source", bin_.alias("bin"))
+        d.select("source", grid_bin(F.col(value_col), width).alias("bin"))
         .groupBy("source", "bin")
         .agg(F.count("*").cast("double").alias("n"))
         .localCheckpoint(eager=False)  # lazy (r10): first PSI leg materializes
@@ -1983,14 +1989,13 @@ def psi_drift_frame(
 
 def psi_from_bin_counts(counts: DataFrame) -> DataFrame:
     """(source, bin, n) -> (source, n_docs, psi_vs_rest): the smoothed-
-    PSI arithmetic over pre-aggregated bin counts — split out of
-    :func:`psi_drift_frame` so the streaming quality gate
-    (ingest.stream_quality_drift_gate) can run the IDENTICAL formula over its
-    stored batch/baseline histograms (with exactly two labels,
-    label-vs-rest IS batch-vs-baseline — the stream_embedding_gate
-    precedent), which is what pins the stream statistic equal to the
-    batch quality_drift by construction. Callers materialize ``counts``
-    (it feeds both the label list and the grid join)."""
+    PSI arithmetic over pre-aggregated bin counts. Like
+    ks_from_bin_counts and chisq_from_counts, it is what the streaming
+    gates (drift, language, quality) score their batch-vs-baseline
+    histograms with: with exactly two labels, label-vs-rest IS
+    batch-vs-baseline, so each ledger statistic equals its batch twin
+    by construction. Callers materialize ``counts`` (it feeds both the
+    label list and the grid join)."""
     spark = counts.sparkSession
     srcs = counts.select("source").distinct()
     bins = spark.range(KS_NBINS).select(F.col("id").cast("bigint").alias("bin"))
@@ -2731,6 +2736,14 @@ def chisq_drift_frame(d: DataFrame, cat_col: str = "lang") -> DataFrame:
         .agg(F.count("*").cast("double").alias("n"))
         .localCheckpoint(eager=False)  # lazy (r10): source-list job materializes
     )
+    return chisq_from_counts(counts)
+
+
+def chisq_from_counts(counts: DataFrame) -> DataFrame:
+    """(source, cat, n) -> (source, n_docs, chisq_vs_rest, dof): the
+    two-sample chi-square arithmetic over pre-aggregated category
+    counts, shared with the streaming language gate (see
+    :func:`psi_from_bin_counts`). Callers materialize ``counts``."""
     srcs = counts.select("source").distinct()
     cats = counts.select("cat").distinct()
     # sources x categories literal grid — bounded cross of tiny frames,

@@ -24,7 +24,9 @@ Both run to completion on local parquet/text dirs via
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window as W
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, Row, SparkSession, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
@@ -602,13 +604,7 @@ def stream_incremental_dedup(
     At 100 TB the stores are partitioned tables keyed like their probes
     (digest / band signature / cluster id).
     """
-    schema = spark.read.parquet(docs_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .parquet(docs_dir)
-        .filter(F.col("n_chars") > 0)
-        .select("doc_id", "text")
-    )
+    stream = _stream_docs(spark, docs_dir).select("doc_id", "text")
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
         intake_batch(spark, store_dir, batch_df)
@@ -656,9 +652,6 @@ def intake_batch(spark: SparkSession, store_dir: str, batch_df: DataFrame) -> No
     clusters_dir = os.path.join(store_dir, "clusters")
     edges_dir = os.path.join(store_dir, "edges")
 
-    def _read_or_empty(path: str, ddl: str) -> DataFrame:
-        return _read_store_or_empty(spark, path, ddl)
-
     # in-batch digest collapse as ONE min-over-window pass (r10, the
     # batch dedup_decision_frames shape): the old groupBy(min_by) +
     # digest join recomputed md5(text) three times over the batch and
@@ -689,9 +682,11 @@ def intake_batch(spark: SparkSession, store_dir: str, batch_df: DataFrame) -> No
     # decisions + landing + index share the survivor filter — a narrow
     # in-partition filter over the rep_w leaf, so no second checkpoint
     batch = grouped
-    ex_idx = _read_or_empty(index_dir, "doc_id bigint, _d string, sh array<string>")
-    ex_bands = _read_or_empty(
-        sigindex_dir, "doc_id bigint, band_id int, band_sig string"
+    ex_idx = _read_store_or_empty(
+        spark, index_dir, "doc_id bigint, _d string, sh array<string>"
+    )
+    ex_bands = _read_store_or_empty(
+        spark, sigindex_dir, "doc_id bigint, band_id int, band_sig string"
     )
     inc_idx = doc_index(batch).localCheckpoint()
     # band signatures derive from the checkpointed index's distinct
@@ -771,7 +766,7 @@ def intake_batch(spark: SparkSession, store_dir: str, batch_df: DataFrame) -> No
         ["src", "dst"],
         keep="existing",
     )
-    cl = _read_or_empty(clusters_dir, "doc_id bigint, cluster_id bigint")
+    cl = _read_store_or_empty(spark, clusters_dir, "doc_id bigint, cluster_id bigint")
     # current label of each matched landed doc (itself if unlabeled)
     old = dup_pairs.join(
         cl.select(F.col("doc_id").alias("ex_id"), "cluster_id"), "ex_id", "left"
@@ -943,13 +938,7 @@ def stream_split_assign(
     the straddle lands in ``split_conflicts/``). The batch twin is
     ``leakage_safe_split``; parity under min-member-first arrival and
     replay stability are pinned in tests/test_streaming.py."""
-    schema = spark.read.parquet(docs_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .parquet(docs_dir)
-        .filter(F.col("n_chars") > 0)
-        .select("doc_id", "text")
-    )
+    stream = _stream_docs(spark, docs_dir).select("doc_id", "text")
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
         intake_batch(spark, store_dir, batch_df)
@@ -1335,15 +1324,12 @@ def stream_span_dedup(
     blockindex_dir = os.path.join(store_dir, "blockindex")
     stream = _stream_docs(spark, docs_dir).select("doc_id", "text")
 
-    def _read_or_empty(path: str, ddl: str) -> DataFrame:
-        if os.path.exists(path):
-            return spark.read.parquet(path)
-        return spark.createDataFrame([], ddl)
-
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
         blk = doc_blocks(batch_df).localCheckpoint()
         rows = block_rows(batch_df).localCheckpoint()
-        ex = _read_or_empty(blockindex_dir, "bh bigint, doc_id bigint, bi int")
+        ex = _read_store_or_empty(
+            spark, blockindex_dir, "bh bigint, doc_id bigint, bi int"
+        )
         # store hits: every occurrence of an already-owned hash is cut —
         # except the owner row itself (replay: the batch's own blocks
         # are already in the index and must not erase themselves)
@@ -1424,6 +1410,113 @@ def drift_batch_key(batch_df: DataFrame) -> tuple[int, str]:
     )
 
 
+def _baseline_gate(
+    spark: SparkSession,
+    stream: DataFrame,
+    store_dir: str,
+    checkpoint_dir: str,
+    summary_name: str,
+    ledger_name: str,
+    ledger_ddl: str,
+    summarize: Callable[[DataFrame], DataFrame],
+    score: Callable[[DataFrame, DataFrame], tuple],
+    tag: str | None = None,
+) -> StreamingQuery:
+    """The per-batch skeleton every baseline intake gate shares — the
+    replay rule decided once. ``stream`` carries the batch identity as
+    ``doc_id`` plus whatever ``summarize`` reads; a gate supplies only
+    that projection, ``summarize`` and ``score``. Per micro-batch
+    (foreachBatch):
+
+    1. key the batch with :func:`drift_batch_key`, suffixed ``-<tag>``
+       when the gate has a config tag (the watched column, grid or
+       weights are part of the store's semantics: keys scope to the
+       config and the baseline filters to it, so one store_dir can
+       carry several configs side by side);
+    2. reduce the batch to a bounded summary (``summarize`` — the ONLY
+       batch-sized work) and localCheckpoint it;
+    3. read the baseline: every OTHER batch's stored summary rows under
+       the same tag, ``batch_key`` dropped (bounded: batches x summary
+       rows, never raw records);
+    4. ``score(summary, baseline)`` returns the ledger's statistic
+       columns, including the gate's own no-baseline values;
+    5. first-wins upsert of one ledger row (batch_key, batch size,
+       statistics...) into ``<store_dir>/<ledger_name>``, then of the
+       summary under its batch_key into ``<store_dir>/<summary_name>``.
+
+    Baseline exclusion is BY KEY, so an at-least-once replay recomputes
+    the identical statistic and both upserts no-op: the ledger never
+    duplicates and the baseline never double-counts. A batch's summary
+    rows only ever land together, so batch_key alone keys them. The
+    first batch has no baseline; an empty batch writes nothing."""
+    import os
+
+    from eurovision_spark.sinks import upsert_parquet
+
+    summary_dir = os.path.join(store_dir, summary_name)
+    ledger_dir = os.path.join(store_dir, ledger_name)
+
+    def _process(batch_df: DataFrame, epoch_id: int) -> None:
+        n, batch_key = drift_batch_key(batch_df.select("doc_id"))
+        if not n:
+            return
+        if tag:
+            batch_key = f"{batch_key}-{tag}"
+        summary = summarize(batch_df).localCheckpoint()
+        if os.path.exists(summary_dir):
+            others = F.col("batch_key") != batch_key
+            if tag:
+                others &= F.col("batch_key").endswith(f"-{tag}")
+            baseline = spark.read.parquet(summary_dir).filter(others).drop("batch_key")
+        else:
+            baseline = summary.limit(0)
+        ledger_row = spark.createDataFrame(
+            [(batch_key, n, *score(summary, baseline))], ledger_ddl
+        )
+        upsert_parquet(ledger_row, ledger_dir, ["batch_key"], keep="existing")
+        upsert_parquet(
+            summary.select(F.lit(batch_key).alias("batch_key"), "*"),
+            summary_dir,
+            ["batch_key"],
+            keep="existing",
+        )
+
+    return (
+        stream.writeStream.foreachBatch(_process)
+        .option("checkpointLocation", checkpoint_dir)
+        .start()
+    )
+
+
+def _histogram(batch: DataFrame, cell: str) -> DataFrame:
+    """(cell, n) counts of a batch — the bounded summary of the
+    histogram gates (one partial/final count, <= distinct cells out)."""
+    return batch.groupBy(cell).agg(F.count("*").cast("double").alias("n"))
+
+
+def _batch_vs_baseline(
+    summary: DataFrame,
+    baseline: DataFrame,
+    twin: Callable[[DataFrame], DataFrame],
+) -> Row | None:
+    """Score a (cell, n) batch summary against its baseline with the
+    BATCH twin's own arithmetic: the summed baseline and the batch form
+    a two-label ``__batch__``/``__baseline__`` union, and with exactly
+    two labels the twin's label-vs-rest IS batch-vs-baseline — so the
+    ledger statistic is the twin's formula by construction. Returns the
+    twin's ``__batch__`` row, or None when there is no baseline yet."""
+    if baseline.isEmpty():
+        return None
+    cells = [c for c in summary.columns if c != "n"]
+    base = baseline.groupBy(*cells).agg(F.sum("n").alias("n"))
+    two = (
+        summary.select(F.lit("__batch__").alias("source"), *cells, "n")
+        .unionByName(base.select(F.lit("__baseline__").alias("source"), *cells, "n"))
+        .localCheckpoint()
+    )
+    return twin(two).filter(F.col("source") == "__batch__").first()
+
+
 def stream_drift_gate(
     spark: SparkSession,
     docs_dir: str,
@@ -1437,138 +1530,60 @@ def stream_drift_gate(
     ``value`` (a numeric column name or expression over the document
     schema; document length by default, token count or a quality logit
     just as well — the grid is column-generic like ks_drift_frame) is
-    compared (grid two-sample KS, the operators/textstats.ks_drift
-    formulation) against the LANDED baseline before the batch folds
-    into it, and one ledger row per batch records the statistic and
-    the alert decision. ``width`` is the fixed bin width (defaults to
-    the n_chars KS_W). This is the check that stops a bad crawl slice
-    (truncated pages, boilerplate floods, wrong parser) from silently
-    polluting a 100 TB mixture.
+    compared (grid two-sample KS, scored by the batch twin's
+    ks_from_bin_counts) against the LANDED baseline before the batch
+    folds into it, and one ledger row per batch records the statistic
+    and the alert decision. ``width`` is the fixed bin width (defaults
+    to the n_chars KS_W). This is the check that stops a bad crawl
+    slice (truncated pages, boilerplate floods, wrong parser) from
+    silently polluting a 100 TB mixture.
 
-    Stores (keyed parquet):
+    Stores (keyed parquet, the :func:`_baseline_gate` skeleton):
 
     - ``hist_batches/`` (batch_key, bin, n) — each batch's fixed-grid
-      length histogram, keyed by a DETERMINISTIC batch digest
+      histogram, keyed by a DETERMINISTIC batch digest
       (``drift_batch_key``: row count + bit_xor of xxhash64(doc_id),
-      a full 64-bit order-independent, replay-stable content key);
+      a full 64-bit order-independent, replay-stable content key)
+      tagged with the (value, width) grid;
     - ``drift_ledger/`` (batch_key, n_docs, ks_vs_baseline, alert) —
       one decision row per distinct batch.
 
-    Per batch: histogram the batch (the ONLY batch-sized work — one
-    partial/final (bin) count, <= 64 rows out), compute KS against the
-    baseline = sum of all OTHER batches' stored histograms (bounded:
-    batches x 64 rows), append the ledger row, fold the histogram in.
-    Baseline exclusion is BY KEY, so an at-least-once replay recomputes
-    the identical statistic and both first-wins upserts no-op — the
-    ledger never duplicates and the baseline never double-counts. The
-    first batch has no baseline: ks is null, alert 0 (nothing to drift
-    from). At corpus scale the histogram store stays tiny (64 rows per
-    ingested batch) and the KS arithmetic never touches document
-    rows."""
-    import os
+    Per batch the only batch-sized work is one partial/final (bin)
+    count, <= 64 rows out; the baseline sums all OTHER batches' stored
+    histograms of the same grid. The first batch has no baseline: ks
+    is null, alert 0 (nothing to drift from)."""
+    import hashlib
 
-    from eurovision_spark.operators.textstats import KS_NBINS, KS_W
-    from eurovision_spark.sinks import upsert_parquet
+    from eurovision_spark.operators.textstats import KS_W, grid_bin, ks_from_bin_counts
 
-    hist_dir = os.path.join(store_dir, "hist_batches")
-    ledger_dir = os.path.join(store_dir, "drift_ledger")
     val = F.col(value) if isinstance(value, str) else value
     w = float(width) if width is not None else KS_W
     # r08 review finding: the binned VALUE and WIDTH define the grid's
     # semantics — histograms from different (value, width) configs must
     # never merge into one baseline, and a config change must not let a
-    # replay freeze a stale ledger row. The grid tag rides in the batch
-    # key (so ledger + histogram keys are config-scoped) and the
-    # baseline filters to ITS grid only, so one store_dir can safely
-    # carry several watched marginals side by side.
-    import hashlib
-
+    # replay freeze a stale ledger row, so the grid tag scopes the keys
     _val_repr = value if isinstance(value, str) else str(value)
     grid_tag = hashlib.md5(f"{_val_repr}|{w}".encode()).hexdigest()[:8]
-
-    schema = spark.read.parquet(docs_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .parquet(docs_dir)
-        .filter(F.col("n_chars") > 0)
-        .select("doc_id", val.alias("_val"))
+    stream = _stream_docs(spark, docs_dir).select(
+        "doc_id", grid_bin(val, w).alias("bin")
     )
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        bin_ = (
-            F.least(
-                F.greatest(F.floor(F.col("_val") / F.lit(w)), F.lit(0)),
-                F.lit(KS_NBINS - 1),
-            )
-        ).cast("bigint")
-        keyed = batch_df.select("doc_id", bin_.alias("bin"))
-        n_docs, batch_key = drift_batch_key(keyed)
-        if not n_docs:
-            return
-        batch_key = f"{batch_key}-g{grid_tag}"
-        counts = (
-            keyed.groupBy("bin")
-            .agg(F.count("*").cast("double").alias("n"))
-            .localCheckpoint()
-        )
-        # baseline = every OTHER batch's stored histogram (by key, so a
-        # replayed batch excludes itself and recomputes identically)
-        base = _read_store_or_empty(
-            spark, hist_dir, "batch_key string, bin bigint, n double"
-        ).filter(
-            (F.col("batch_key") != batch_key)
-            & F.col("batch_key").endswith(f"-g{grid_tag}")
-        )
-        base_counts = base.groupBy("bin").agg(F.sum("n").alias("n"))
-        if base_counts.isEmpty():
-            ks_val, alert = None, 0
-        else:
-            bins = spark.range(KS_NBINS).select(
-                F.col("id").cast("bigint").alias("bin")
-            )
-            wcum = W.orderBy("bin")  # 64 rows — a global window is fine
-            g = (
-                bins.join(
-                    counts.select("bin", F.col("n").alias("nb")), "bin", "left"
-                )
-                .join(base_counts.select("bin", F.col("n").alias("na")), "bin", "left")
-                .select(
-                    "bin",
-                    F.coalesce("nb", F.lit(0.0)).alias("nb"),
-                    F.coalesce("na", F.lit(0.0)).alias("na"),
-                )
-                .select(
-                    F.sum("nb").over(wcum).alias("cb"),
-                    F.sum("na").over(wcum).alias("ca"),
-                    F.sum("nb").over(W.partitionBy()).alias("tb"),
-                    F.sum("na").over(W.partitionBy()).alias("ta"),
-                )
-            )
-            ks_val = (
-                g.agg(
-                    F.round(
-                        F.max(F.abs(F.col("cb") / F.col("tb") - F.col("ca") / F.col("ta"))),
-                        6,
-                    )
-                ).first()[0]
-            )
-            alert = int(ks_val is not None and ks_val > DRIFT_KS_ALERT)
-        ledger_row = spark.createDataFrame(
-            [(batch_key, n_docs, ks_val, alert)],
-            "batch_key string, n_docs bigint, ks_vs_baseline double, alert int",
-        )
-        upsert_parquet(ledger_row, ledger_dir, ["batch_key"], keep="existing")
-        upsert_parquet(
-            counts.select(F.lit(batch_key).alias("batch_key"), "bin", "n"),
-            hist_dir,
-            ["batch_key", "bin"],
-            keep="existing",
-        )
+    def score(hist: DataFrame, baseline: DataFrame) -> tuple:
+        row = _batch_vs_baseline(hist, baseline, ks_from_bin_counts)
+        ks = row.ks_vs_rest if row else None
+        return ks, int(ks is not None and ks > DRIFT_KS_ALERT)
 
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return _baseline_gate(
+        spark,
+        stream,
+        store_dir,
+        checkpoint_dir,
+        "hist_batches",
+        "drift_ledger",
+        "batch_key string, n_docs bigint, ks_vs_baseline double, alert int",
+        lambda batch: _histogram(batch, "bin"),
+        score,
+        tag=f"g{grid_tag}",
     )
 
 
@@ -1594,35 +1609,26 @@ def stream_embedding_gate(
     below EMB_COS_ALERT — drift pulls the batch centroid AWAY, so the
     gate fires LOW, unlike the fire-high KS/chi-square gates).
 
-    Same store/replay discipline as stream_drift_gate:
+    Stores and replay rule: the :func:`_baseline_gate` skeleton, tagged
+    with the watched vector column —
 
     - ``emb_batches/`` (batch_key, d, s, n) — each batch's per-dim
-      component sums + counts under the deterministic
-      ``drift_batch_key`` (the vec ids keyed as doc_id);
+      component sums + counts (the vec ids keyed as doc_id);
     - ``emb_ledger/`` (batch_key, n_vecs, cos_vs_baseline, alert) —
       one decision row per distinct batch.
 
     Per batch the ONLY batch-sized work is one partial/final (dim) sum
     (<= dims rows out — the posexplode never leaves its partition
-    unaggregated); the baseline is the keyed sum of all OTHER batches'
-    stored sums, so an at-least-once replay excludes itself BY KEY,
-    recomputes the identical statistic, and both first-wins upserts
-    no-op. The first batch has no baseline: cosine null, alert 0. The
-    watched vector column is part of the store's semantics (the grid-
-    tag rule): keys scope to it and the baseline filters to it. Dims
-    are compared where BOTH sides have mass (inner join on d — the
-    ragged-safe convention of embedding_drift_frame: a short vector is
-    absent from, not zero at, its missing dims)."""
+    unaggregated). The first batch has no baseline: cosine null, alert
+    0. Dims are compared where BOTH sides have mass (inner join on d —
+    a short vector is absent from, not zero at, its missing dims);
+    that is not embedding_drift_frame's rest-side rule, so this gate
+    keeps its own scoring."""
     import hashlib
-    import os
 
     from eurovision_spark.operators.similarity import as_double, l2norm
-    from eurovision_spark.sinks import upsert_parquet
 
-    sum_dir = os.path.join(store_dir, "emb_batches")
-    ledger_dir = os.path.join(store_dir, "emb_ledger")
     vec_tag = hashlib.md5(vec_col.encode()).hexdigest()[:8]
-
     schema = spark.read.parquet(emb_dir).schema
     stream = (
         spark.readStream.schema(schema)
@@ -1634,60 +1640,46 @@ def stream_embedding_gate(
         .filter(l2norm(F.col("_v")) > 0)
     )
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        n_vecs, batch_key = drift_batch_key(batch_df.select("doc_id"))
-        if not n_vecs:
-            return
-        batch_key = f"{batch_key}-v{vec_tag}"
-        sums = (
-            batch_df.select(F.posexplode("_v").alias("d", "val"))
+    def summarize(batch: DataFrame) -> DataFrame:
+        return (
+            batch.select(F.posexplode("_v").alias("d", "val"))
             .groupBy("d")
             .agg(F.sum("val").alias("s"), F.count("*").cast("double").alias("n"))
-            .localCheckpoint()
         )
-        base = _read_store_or_empty(
-            spark, sum_dir, "batch_key string, d int, s double, n double"
-        ).filter(
-            (F.col("batch_key") != batch_key)
-            & F.col("batch_key").endswith(f"-v{vec_tag}")
-        )
-        base_sums = base.groupBy("d").agg(
+
+    def score(sums: DataFrame, baseline: DataFrame) -> tuple:
+        base_sums = baseline.groupBy("d").agg(
             F.sum("s").alias("bs"), F.sum("n").alias("bn")
         )
         if base_sums.isEmpty():
-            cos_val, alert = None, 0
-        else:
-            g = sums.join(base_sums, "d").select(
-                (F.col("s") / F.col("n")).alias("cb"),
-                (F.col("bs") / F.col("bn")).alias("ca"),
+            return None, 0
+        g = sums.join(base_sums, "d").select(
+            (F.col("s") / F.col("n")).alias("cb"),
+            (F.col("bs") / F.col("bn")).alias("ca"),
+        )
+        cos_val = g.agg(
+            F.round(
+                F.sum(F.col("cb") * F.col("ca"))
+                / (
+                    F.sqrt(F.sum(F.col("cb") * F.col("cb")))
+                    * F.sqrt(F.sum(F.col("ca") * F.col("ca")))
+                ),
+                6,
             )
-            cos_val = g.agg(
-                F.round(
-                    F.sum(F.col("cb") * F.col("ca"))
-                    / (
-                        F.sqrt(F.sum(F.col("cb") * F.col("cb")))
-                        * F.sqrt(F.sum(F.col("ca") * F.col("ca")))
-                    ),
-                    6,
-                )
-            ).first()[0]
-            alert = int(cos_val is not None and cos_val < EMB_COS_ALERT)
-        ledger_row = spark.createDataFrame(
-            [(batch_key, n_vecs, cos_val, alert)],
-            "batch_key string, n_vecs bigint, cos_vs_baseline double, alert int",
-        )
-        upsert_parquet(ledger_row, ledger_dir, ["batch_key"], keep="existing")
-        upsert_parquet(
-            sums.select(F.lit(batch_key).alias("batch_key"), "d", "s", "n"),
-            sum_dir,
-            ["batch_key", "d"],
-            keep="existing",
-        )
+        ).first()[0]
+        return cos_val, int(cos_val is not None and cos_val < EMB_COS_ALERT)
 
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return _baseline_gate(
+        spark,
+        stream,
+        store_dir,
+        checkpoint_dir,
+        "emb_batches",
+        "emb_ledger",
+        "batch_key string, n_vecs bigint, cos_vs_baseline double, alert int",
+        summarize,
+        score,
+        tag=f"v{vec_tag}",
     )
 
 
@@ -1721,7 +1713,7 @@ def stream_quality_drift_gate(
     construction (tests/test_streaming.py). Alert fires HIGH at the
     runbook's significant-shift line (PSI > QGATE_PSI_ALERT).
 
-    Stores (keyed parquet, the stream_drift_gate discipline):
+    Stores and replay rule: the :func:`_baseline_gate` skeleton —
 
     - ``qlogit_batches/`` (batch_key, bin, n) — each batch's 64-bin
       logit histogram under the versioned 64-bit multiset batch digest,
@@ -1732,95 +1724,43 @@ def stream_quality_drift_gate(
 
     Per batch the only batch-sized work is the classifier's per-row
     zero-shuffle fold into one (bin) partial/final count (<= 64 rows
-    out); the baseline folds from stored histograms (bounded: batches x
-    64 rows), never from raw text. First batch: no baseline, PSI null,
-    alert 0. Replay: the baseline excludes the batch's own key, the
-    statistic recomputes identically, both first-wins upserts no-op."""
+    out). First batch: no baseline, PSI null, alert 0."""
     import hashlib
-    import os
 
     from eurovision_spark.operators.textstats import (
-        KS_NBINS,
         QDRIFT_OFF,
         QDRIFT_W,
+        grid_bin,
         psi_from_bin_counts,
         score_documents,
     )
-    from eurovision_spark.sinks import upsert_parquet
 
-    hist_dir = os.path.join(store_dir, "qlogit_batches")
-    ledger_dir = os.path.join(store_dir, "qlogit_ledger")
     wtag = hashlib.md5(repr((list(w), b)).encode()).hexdigest()[:8]
+    stream = _stream_docs(spark, docs_dir).select("doc_id", "text")
 
-    schema = spark.read.parquet(docs_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .parquet(docs_dir)
-        .filter(F.col("n_chars") > 0)
-        .select("doc_id", "text")
-    )
-
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        n_docs, batch_key = drift_batch_key(batch_df.select("doc_id"))
-        if not n_docs:
-            return
-        batch_key = f"{batch_key}-q{wtag}"
+    def summarize(batch: DataFrame) -> DataFrame:
         qv = F.col("qc_logit") + F.lit(QDRIFT_OFF)
-        bin_ = (
-            F.least(
-                F.greatest(F.floor(qv / F.lit(QDRIFT_W)), F.lit(0)),
-                F.lit(KS_NBINS - 1),
-            )
-        ).cast("bigint")
-        counts = (
-            score_documents(batch_df, w, b)
-            .select(bin_.alias("bin"))
-            .groupBy("bin")
-            .agg(F.count("*").cast("double").alias("n"))
-            .localCheckpoint()
+        binned = score_documents(batch, w, b).select(
+            grid_bin(qv, QDRIFT_W).alias("bin")
         )
-        base = _read_store_or_empty(
-            spark, hist_dir, "batch_key string, bin bigint, n double"
-        ).filter(
-            (F.col("batch_key") != batch_key)
-            & F.col("batch_key").endswith(f"-q{wtag}")
-        )
-        if base.isEmpty():
-            psi_val, alert = None, 0
-        else:
-            base_counts = base.groupBy("bin").agg(F.sum("n").alias("n"))
-            two = (
-                counts.select(F.lit("__batch__").alias("source"), "bin", "n")
-                .unionByName(
-                    base_counts.select(
-                        F.lit("__baseline__").alias("source"), "bin", "n"
-                    )
-                )
-                .localCheckpoint()
-            )
-            row = (
-                psi_from_bin_counts(two)
-                .filter(F.col("source") == "__batch__")
-                .first()
-            )
-            psi_val = row.psi_vs_rest if row else None
-            alert = int(psi_val is not None and psi_val > QGATE_PSI_ALERT)
-        ledger_row = spark.createDataFrame(
-            [(batch_key, n_docs, psi_val, alert)],
-            "batch_key string, n_docs bigint, psi_vs_baseline double, alert int",
-        )
-        upsert_parquet(ledger_row, ledger_dir, ["batch_key"], keep="existing")
-        upsert_parquet(
-            counts.select(F.lit(batch_key).alias("batch_key"), "bin", "n"),
-            hist_dir,
-            ["batch_key", "bin"],
-            keep="existing",
-        )
+        return _histogram(binned, "bin")
 
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    def score(hist: DataFrame, baseline: DataFrame) -> tuple:
+        row = _batch_vs_baseline(hist, baseline, psi_from_bin_counts)
+        psi = row.psi_vs_rest if row else None
+        return psi, int(psi is not None and psi > QGATE_PSI_ALERT)
+
+    return _baseline_gate(
+        spark,
+        stream,
+        store_dir,
+        checkpoint_dir,
+        "qlogit_batches",
+        "qlogit_ledger",
+        "batch_key string, n_docs bigint, psi_vs_baseline double, alert int",
+        summarize,
+        score,
+        tag=f"q{wtag}",
     )
 
 
@@ -1959,133 +1899,63 @@ def stream_lang_gate(
     composition-flip check the numeric grids cannot express: every
     arriving micro-batch's ``cat`` mix (language by default; any
     categorical document column) is compared by two-sample chi-square
-    (the operators/textstats.chisq_lang_drift formulation, batch vs
-    landed baseline) BEFORE the batch folds in, and one ledger row per
-    batch records the statistic, its degrees of freedom, and the alert
-    (chi-square per dof above CHISQ_ALERT_PER_DOF). A crawl slice that
-    keeps its length and token profiles but silently flips language
-    composition (wrong parser locale, a proxy rerouting a domain)
-    passes stream_drift_gate on every numeric marginal and fires only
-    here.
+    (the batch twin's chisq_from_counts, batch vs landed baseline)
+    BEFORE the batch folds in, and one ledger row per batch records the
+    statistic, its degrees of freedom, and the alert (chi-square per
+    dof above CHISQ_ALERT_PER_DOF). A crawl slice that keeps its length
+    and token profiles but silently flips language composition (wrong
+    parser locale, a proxy rerouting a domain) passes stream_drift_gate
+    on every numeric marginal and fires only here.
 
-    Same store/replay discipline as stream_drift_gate:
+    Stores and replay rule: the :func:`_baseline_gate` skeleton, tagged
+    with the watched column —
 
     - ``cat_batches/`` (batch_key, cat, n) — each batch's bounded
-      category histogram under the deterministic ``drift_batch_key``;
+      category histogram;
     - ``lang_ledger/`` (batch_key, n_docs, chisq_vs_baseline, dof,
       alert) — one decision row per distinct batch.
 
     Per batch the ONLY batch-sized work is one partial/final category
-    count (<= distinct-categories rows out); the baseline is the keyed
-    sum of all OTHER batches' stored histograms, so an at-least-once
-    replay excludes itself BY KEY, recomputes the identical statistic,
-    and both first-wins upserts no-op. The first batch has no
+    count (<= distinct-categories rows out). The first batch has no
     baseline: statistic and dof are null, alert 0. Expectations on the
-    full-join category grid are strictly positive (a grid row exists
-    only where the batch or the baseline has mass, and both totals are
-    positive once a baseline exists), so no zero denominator."""
-    import os
-
-    from eurovision_spark.sinks import upsert_parquet
-
-    cat_dir = os.path.join(store_dir, "cat_batches")
-    ledger_dir = os.path.join(store_dir, "lang_ledger")
-
+    category grid are strictly positive (a grid row exists only where
+    the batch or the baseline has mass, and both totals are positive
+    once a baseline exists), so no zero denominator."""
     import hashlib
 
-    cat_tag = hashlib.md5(cat.encode()).hexdigest()[:8]
+    from eurovision_spark.operators.textstats import chisq_from_counts
 
-    schema = spark.read.parquet(docs_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .parquet(docs_dir)
-        .filter(F.col("n_chars") > 0)
-        # null-safe category (r08 review finding): a NULL category must
-        # be ONE grid cell on both sides — the full join below uses
-        # non-null-safe equality, so an un-coalesced NULL would split
-        # into two maximal-drift rows and fire a spurious alert
-        .select(
-            "doc_id",
-            F.coalesce(F.col(cat).cast("string"), F.lit("<null>")).alias("_cat"),
-        )
+    cat_tag = hashlib.md5(cat.encode()).hexdigest()[:8]
+    # null-safe category (r08 review finding): a NULL category must be
+    # ONE grid cell on both sides — the twin's grid join uses non-null-
+    # safe equality, so an un-coalesced NULL would split into two
+    # maximal-drift rows and fire a spurious alert
+    stream = _stream_docs(spark, docs_dir).select(
+        "doc_id",
+        F.coalesce(F.col(cat).cast("string"), F.lit("<null>")).alias("cat"),
     )
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        keyed = batch_df.select("doc_id", "_cat")
-        n_docs, batch_key = drift_batch_key(keyed)
-        if not n_docs:
-            return
-        # the watched column is part of the store's semantics (the
-        # numeric gate's grid-tag rule): keys scope to it, the baseline
-        # filters to it, so one store_dir can watch several columns
-        batch_key = f"{batch_key}-c{cat_tag}"
-        counts = (
-            keyed.groupBy("_cat")
-            .agg(F.count("*").cast("double").alias("n"))
-            .localCheckpoint()
-        )
-        base = _read_store_or_empty(
-            spark, cat_dir, "batch_key string, cat string, n double"
-        ).filter(
-            (F.col("batch_key") != batch_key)
-            & F.col("batch_key").endswith(f"-c{cat_tag}")
-        )
-        base_counts = base.groupBy("cat").agg(F.sum("n").alias("n"))
-        if base_counts.isEmpty():
-            chisq_val, dof, alert = None, None, 0
-        else:
-            b = counts.select(F.col("_cat").alias("cat"), F.col("n").alias("nb"))
-            a = base_counts.select("cat", F.col("n").alias("na"))
-            g = (
-                b.join(a, "cat", "full")
-                .select(
-                    "cat",
-                    F.coalesce("nb", F.lit(0.0)).alias("nb"),
-                    F.coalesce("na", F.lit(0.0)).alias("na"),
-                )
-                .select(
-                    "nb",
-                    "na",
-                    F.sum("nb").over(W.partitionBy()).alias("tb"),
-                    F.sum("na").over(W.partitionBy()).alias("ta"),
-                )
-            )
-            t = F.col("nb") + F.col("na")
-            tot = F.col("tb") + F.col("ta")
-            e_b = t * F.col("tb") / tot
-            e_a = t * F.col("ta") / tot
-            term = (F.col("nb") - e_b) * (F.col("nb") - e_b) / e_b + (
-                F.col("na") - e_a
-            ) * (F.col("na") - e_a) / e_a
-            row = g.agg(
-                F.round(F.sum(term), 6).alias("chisq"), F.count("*").alias("k")
-            ).first()
-            chisq_val, dof = row.chisq, int(row.k) - 1
-            alert = int(
-                chisq_val is not None
-                and chisq_val > CHISQ_ALERT_PER_DOF * max(dof, 1)
-            )
-        ledger_row = spark.createDataFrame(
-            [(batch_key, n_docs, chisq_val, dof, alert)],
-            "batch_key string, n_docs bigint, chisq_vs_baseline double, "
-            "dof int, alert int",
-        )
-        upsert_parquet(ledger_row, ledger_dir, ["batch_key"], keep="existing")
-        upsert_parquet(
-            counts.select(
-                F.lit(batch_key).alias("batch_key"),
-                F.col("_cat").alias("cat"),
-                "n",
-            ),
-            cat_dir,
-            ["batch_key", "cat"],
-            keep="existing",
+    def score(hist: DataFrame, baseline: DataFrame) -> tuple:
+        row = _batch_vs_baseline(hist, baseline, chisq_from_counts)
+        if row is None:
+            return None, None, 0
+        chisq, dof = row.chisq_vs_rest, int(row.dof)
+        return chisq, dof, int(
+            chisq is not None and chisq > CHISQ_ALERT_PER_DOF * max(dof, 1)
         )
 
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return _baseline_gate(
+        spark,
+        stream,
+        store_dir,
+        checkpoint_dir,
+        "cat_batches",
+        "lang_ledger",
+        "batch_key string, n_docs bigint, chisq_vs_baseline double, "
+        "dof int, alert int",
+        lambda batch: _histogram(batch, "cat"),
+        score,
+        tag=f"c{cat_tag}",
     )
 
 
@@ -2110,11 +1980,11 @@ def stream_rate_gate(
     corpus's FULL per-type hourly distribution — the baseline that is
     incrementally maintainable from bounded per-batch histograms).
 
-    Stores (keyed parquet, the stream_drift_gate discipline):
+    Stores and replay rule: the :func:`_baseline_gate` skeleton
+    (untagged; the event ids key the batch digest) —
 
     - ``rate_batches/`` (batch_key, event_type, bucket, n) — each
-      batch's (type, hour) count grid under the versioned 64-bit
-      multiset batch digest (drift_batch_key over event ids);
+      batch's (type, hour) count grid;
     - ``rate_ledger/`` (batch_key, n_events, n_cells, n_anomalous,
       alert) — one decision row per distinct batch.
 
@@ -2127,9 +1997,7 @@ def stream_rate_gate(
     rate_anomaly (k*sumsq = sum^2 — no epsilon), where a deviating
     arriving cell alerts by integer compare. Types unseen in the
     baseline contribute no verdict (NULL z, not anomalous — nothing
-    to deviate from). First batch: no baseline, alert 0. Replay: the
-    baseline excludes the batch's own key, so the statistic recomputes
-    identically and both first-wins upserts no-op.
+    to deviate from). First batch: no baseline, alert 0.
 
     Scope, stated plainly (what this gate can and cannot fire on):
 
@@ -2150,12 +2018,6 @@ def stream_rate_gate(
       dropout alert for that batch). The replay/wave tests pin the
       aligned form; an aligned trigger (processingTime on the hour) or
       the batch twin adjudicates the sliced case."""
-    import os
-
-    from eurovision_spark.sinks import upsert_parquet
-
-    rates_dir = os.path.join(store_dir, "rate_batches")
-    ledger_dir = os.path.join(store_dir, "rate_ledger")
     HOUR_US = 3_600_000_000
 
     raw = stream_events_source(spark, events_dir)
@@ -2165,80 +2027,62 @@ def stream_rate_gate(
     # + floor would diverge from the batch twin at pre-epoch ts and
     # lose integer exactness past 2^53
     stream = raw.select(
-        "event_id",
+        F.col("event_id").alias("doc_id"),
         "event_type",
         ts_us_col(raw.schema["ts"].dataType).alias("_ts_us"),
     ).select(
-        "event_id",
+        "doc_id",
         "event_type",
         F.expr(f"_ts_us div {HOUR_US}").alias("bucket"),
     )
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        n_events, batch_key = drift_batch_key(
-            batch_df.select(F.col("event_id").alias("doc_id"))
-        )
-        if not n_events:
-            return
-        counts = (
-            batch_df.groupBy("event_type", "bucket")
-            .agg(F.count("*").cast("bigint").alias("n"))
-            .localCheckpoint()
-        )
-        base = _read_store_or_empty(
-            spark, rates_dir, "batch_key string, event_type string, bucket bigint, n bigint"
-        ).filter(F.col("batch_key") != batch_key)
-        landed = base.groupBy("event_type", "bucket").agg(
-            F.sum("n").cast("bigint").alias("n")
-        )
-        n_cells = counts.count()
-        if landed.isEmpty():
-            n_anom, alert = 0, 0
-        else:
-            # per-type exact-integer stats over the landed span: hours
-            # between a type's min and max with no events are genuine
-            # zeros — they enter k, never the sums
-            stats = landed.groupBy("event_type").agg(
-                (F.max("bucket") - F.min("bucket") + 1).cast("bigint").alias("k"),
-                F.sum("n").cast("bigint").alias("s"),
-                F.sum(F.col("n") * F.col("n")).cast("bigint").alias("sq"),
-            )
-            j = counts.join(stats, "event_type", "left")
-            flat = F.col("k") * F.col("sq") == F.col("s") * F.col("s")
-            mean = F.col("s") / F.col("k")
-            var = (F.col("sq") - F.col("s") * F.col("s") / F.col("k")) / (
-                F.col("k") - 1
-            )
-            z = F.round(
-                (F.col("n") - mean) / F.sqrt(F.greatest(var, F.lit(0.0))), 4
-            )
-            anom = (
-                F.when(F.col("k").isNull(), F.lit(0))  # unseen type: no verdict
-                .when(F.col("k") < 2, F.lit(0))  # one landed hour: no spread
-                .when(flat, (F.col("n") * F.col("k") != F.col("s")).cast("int"))
-                .otherwise((F.abs(z) > RATE_Z_ALERT).cast("int"))
-            )
-            n_anom = int(
-                j.agg(F.coalesce(F.sum(anom), F.lit(0))).first()[0]
-            )
-            alert = int(n_anom > 0)
-        ledger_row = spark.createDataFrame(
-            [(batch_key, n_events, n_cells, n_anom, alert)],
-            "batch_key string, n_events bigint, n_cells bigint, "
-            "n_anomalous bigint, alert int",
-        )
-        upsert_parquet(ledger_row, ledger_dir, ["batch_key"], keep="existing")
-        upsert_parquet(
-            counts.select(F.lit(batch_key).alias("batch_key"), "*"),
-            rates_dir,
-            ["batch_key", "event_type", "bucket"],
-            keep="existing",
+    def summarize(batch: DataFrame) -> DataFrame:
+        return batch.groupBy("event_type", "bucket").agg(
+            F.count("*").cast("bigint").alias("n")
         )
 
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    def score(counts: DataFrame, baseline: DataFrame) -> tuple:
+        n_cells = counts.count()
+        landed = baseline.groupBy("event_type", "bucket").agg(
+            F.sum("n").cast("bigint").alias("n")
+        )
+        if landed.isEmpty():
+            return n_cells, 0, 0
+        # per-type exact-integer stats over the landed span: hours
+        # between a type's min and max with no events are genuine
+        # zeros — they enter k, never the sums
+        stats = landed.groupBy("event_type").agg(
+            (F.max("bucket") - F.min("bucket") + 1).cast("bigint").alias("k"),
+            F.sum("n").cast("bigint").alias("s"),
+            F.sum(F.col("n") * F.col("n")).cast("bigint").alias("sq"),
+        )
+        j = counts.join(stats, "event_type", "left")
+        flat = F.col("k") * F.col("sq") == F.col("s") * F.col("s")
+        mean = F.col("s") / F.col("k")
+        var = (F.col("sq") - F.col("s") * F.col("s") / F.col("k")) / (
+            F.col("k") - 1
+        )
+        z = F.round((F.col("n") - mean) / F.sqrt(F.greatest(var, F.lit(0.0))), 4)
+        anom = (
+            F.when(F.col("k").isNull(), F.lit(0))  # unseen type: no verdict
+            .when(F.col("k") < 2, F.lit(0))  # one landed hour: no spread
+            .when(flat, (F.col("n") * F.col("k") != F.col("s")).cast("int"))
+            .otherwise((F.abs(z) > RATE_Z_ALERT).cast("int"))
+        )
+        n_anom = int(j.agg(F.coalesce(F.sum(anom), F.lit(0))).first()[0])
+        return n_cells, n_anom, int(n_anom > 0)
+
+    return _baseline_gate(
+        spark,
+        stream,
+        store_dir,
+        checkpoint_dir,
+        "rate_batches",
+        "rate_ledger",
+        "batch_key string, n_events bigint, n_cells bigint, "
+        "n_anomalous bigint, alert int",
+        summarize,
+        score,
     )
 
 
@@ -2320,13 +2164,7 @@ def stream_contamination_gate(
     verdict_dir = os.path.join(store_dir, "contam_verdicts")
     ledger_dir = os.path.join(store_dir, "contam_ledger")
 
-    schema = spark.read.parquet(docs_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .parquet(docs_dir)
-        .filter(F.col("n_chars") > 0)
-        .select("doc_id", "text")
-    )
+    stream = _stream_docs(spark, docs_dir).select("doc_id", "text")
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
         n_docs, batch_key = drift_batch_key(batch_df.select("doc_id"))

@@ -1301,9 +1301,12 @@ def test_stream_lang_gate_alerts_and_is_replay_stable(spark, tmp_path):
     (low chi-square, no alert), a batch that flips to a language the
     baseline never saw alarms — while its LENGTH profile matches, so
     the numeric gate would stay silent — and an at-least-once replay
-    changes neither the ledger nor the stored category histograms."""
+    changes neither the ledger nor the stored category histograms, and
+    the ledger statistic equals the BATCH chisq_lang_drift formulation
+    on the same split (twin parity)."""
     import shutil
 
+    from eurovision_spark.operators.textstats import chisq_drift_frame
     from eurovision_spark.streaming.ingest import stream_lang_gate
 
     docs_dir = tmp_path / "docs"
@@ -1360,6 +1363,17 @@ def test_stream_lang_gate_alerts_and_is_replay_stable(spark, tmp_path):
     assert hist_before == sorted(
         map(tuple, spark.read.parquet(str(store / "cat_batches")).collect())
     )
+
+    # batch-twin parity: with exactly two labeled slices, chisq_lang_drift's
+    # source-vs-rest IS the two-sample statistic the gate computed
+    union = spark.createDataFrame(
+        [("base", lang) for _, lang, _ in mix(0, ["en", "de"]) + mix(1000, ["en", "de"])]
+        + [("w3", lang) for _, lang, _ in mix(2000, ["zz"])],
+        "source string, lang string",
+    )
+    twin = {r.source: r for r in chisq_drift_frame(union).collect()}
+    assert twin["w3"].dof == third.dof
+    assert abs(twin["w3"].chisq_vs_rest - third.chisq_vs_baseline) <= 1e-6
 
 
 def test_stream_lang_gate_null_category_is_one_cell(spark, tmp_path):
